@@ -101,19 +101,17 @@ HEADLINE = [
 
 
 def _j1_knn_edges_blas(spark, sf_dir):
-    """Bench-only variant: the exact-kNN BLAS tier (fold_parity=False,
-    one Gram matmul per Arrow batch — the production tier, 3.7x at a
-    20k base). Graded paths keep fold_parity=True for last-ulp oracle
-    bit-parity, so this rides the bench as a tracked number instead of
-    a registry row."""
+    """Bench-only row kept under its historical name so BENCH history
+    lines up: the exact-kNN join of the embeddings with themselves.
+    It once timed a separate Gram-matmul tier; the exact kernel now
+    screens with that matmul and stays fold-exact, so this is the same
+    kernel as ``j1_knn_edges`` called through ``knn_join``."""
     from vector_database_watermarking_spark.operators import knn
     from vector_database_watermarking_spark.registry import K
     from vector_database_watermarking_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return knn.knn_join(
-        emb, emb, k=K, exact=True, exclude_self=True, fold_parity=False
-    )
+    return knn.knn_join(emb, emb, k=K, exact=True, exclude_self=True)
 
 
 def _kmeans_refine_arrow(spark, sf_dir):

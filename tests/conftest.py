@@ -35,3 +35,8 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF0001
+
+
+@pytest.fixture(scope="session")
+def sf001_dir():
+    return SF001

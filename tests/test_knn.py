@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 
 from vector_database_watermarking_spark.operators import knn
 
@@ -169,23 +170,113 @@ def test_lsh_dense_cluster_queries_still_get_candidates(spark):
     assert frac > 0.9, frac
 
 
-def test_blas_tier_matches_fold_tier(spark, sf_dir):
-    """fold_parity=False (Gram-matmul distances) must produce the same
-    (src, rank) -> dst assignment as the fold tier on the fixture."""
-    from vector_database_watermarking_spark.operators import knn
+def _fold_topk(q_rows, b_rows, k):
+    """Reference for the exact tiers: the full sequential float64 fold
+    over every pair, then ``lexsort((ids, round(d², 6)))`` per query,
+    self-hits and non-finite keys dropped. Rows are (src, rank, dst,
+    dist bits)."""
+    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
+    b_rows = sorted(b_rows, key=lambda r: r[0])
+    b_ids = np.array([r[0] for r in b_rows], dtype=np.int64)
+    B = np.array([r[1] for r in b_rows], dtype=np.float64)
+    d2 = np.zeros((len(Q), len(B)))
+    for i in range(B.shape[1]):
+        diff = Q[:, i][:, None] - B[:, i][None, :]
+        d2 += diff * diff
+    key = np.round(d2, 6)
+    key[q_ids[:, None] == b_ids[None, :]] = np.inf
+    out = []
+    for r, src in enumerate(q_ids):
+        for rank, j in enumerate(np.lexsort((b_ids, key[r]))[:k], 1):
+            if np.isfinite(key[r, j]):
+                out.append((int(src), rank, int(b_ids[j]), float(np.sqrt(d2[r, j])).hex()))
+    return sorted(out)
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
+
+def _parity_cases():
+    rng = np.random.RandomState(11)
+    clique = [
+        (g * 100 + m, vec)
+        for g in range(3)
+        for vec in [rng.randn(8).tolist()]
+        for m in range(15)
+    ]
+    # squared offsets at (j + 1/2)·1e-6 from a far-off center, ids
+    # shuffled: fold keys land on both sides of each rounding boundary,
+    # and at |c|² ≈ 10¹¹ the Gram screen's cancellation error exceeds
+    # 1e-6, so only the δ term of the threshold keeps the neighbors
+    center = rng.randn(8) * 1e5
+    direction = rng.randn(8)
+    direction /= np.linalg.norm(direction)
+    ids = rng.permutation(40)
+    boundary = [
+        (int(ids[j]), (center + direction * np.sqrt((j // 2 + 0.5) * 1e-6)).tolist())
+        for j in range(40)
+    ]
+    far = [(i, (rng.randn(16) * 0.3).tolist()) for i in range(50)]
+    return {
+        "duplicate_clique": (clique, clique, 10),
+        "rounding_boundary": (boundary + [(1000, center.tolist())], boundary, 10),
+        "base_smaller_than_k": (clique[:4], clique[:4], 10),
+        "query_not_in_base": ([(1000, [0.05] * 16)], far, 5),
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["duplicate_clique", "rounding_boundary", "base_smaller_than_k", "query_not_in_base"]
+)
+def test_screened_kernel_matches_sequential_fold(spark, case):
+    """The screened Gram kernel returns exactly what a full sequential
+    fold would: same (src, rank, dst) and the same float64 dist bits,
+    on ties at distance 0, keys straddling a 1e-6 rounding boundary,
+    a base smaller than k + 1 and a query outside the base."""
+    q_rows, b_rows, k = _parity_cases()[case]
+    schema = "vec_id long, embedding array<double>"
+    q = spark.createDataFrame(q_rows, schema)
+    b = spark.createDataFrame(b_rows, schema)
+    got = sorted(
+        (r["src"], r["rank"], r["dst"], r["dist"].hex())
+        for r in knn.knn_join(q, b, k=k).collect()
     )
-    a = {
-        (r["src"], r["rank"]): r["dst"]
-        for r in knn.knn_join(emb, emb, k=5).collect()
-    }
-    b = {
-        (r["src"], r["rank"]): r["dst"]
-        for r in knn.knn_join(emb, emb, k=5, fold_parity=False).collect()
-    }
-    assert a == b
+    assert got == _fold_topk(q_rows, b_rows, k)
+
+
+def _fixture_rows(spark, sf):
+    return [
+        (r["vec_id"], list(r["embedding"]))
+        for r in spark.read.parquet(f"{sf}/embeddings.parquet").collect()
+    ]
+
+
+@pytest.mark.parametrize("tier", ["broadcast", "blocked"])
+def test_screened_kernel_matches_fold_on_fixture(spark, sf001_dir, monkeypatch, tier):
+    """Bit parity on the sf0.01 fixture, through the broadcast tier and
+    through the blocked tier (forced as in
+    ``test_cosine_topk_blocked_matches_broadcast``)."""
+    if tier == "blocked":
+        monkeypatch.setattr(knn, "MAX_BROADCAST_ROWS", 100)
+    rows = _fixture_rows(spark, sf001_dir)
+    emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
+    got = sorted(
+        (r["src"], r["rank"], r["dst"], r["dist"].hex())
+        for r in knn.knn_join(emb, emb, k=10).collect()
+    )
+    assert got == _fold_topk(rows, rows, 10)
+
+
+def test_screened_kernel_drops_nan_rows(spark, sf_dir):
+    """A row with a NaN component gets no neighbors and is nobody's
+    neighbor; every other row still matches the fold exactly."""
+    rows = _fixture_rows(spark, sf_dir)
+    rows[3] = (rows[3][0], [float("nan")] + rows[3][1][1:])
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = sorted(
+        (r["src"], r["rank"], r["dst"], r["dist"].hex())
+        for r in knn.knn_edges(emb, k=5).collect()
+    )
+    assert got == _fold_topk(rows, rows, 5)
+    assert all(rows[3][0] not in (src, dst) for src, _, dst, _ in got)
 
 
 def test_lsh_duplicate_collapse_matches_exact(spark):

@@ -8,6 +8,7 @@ from vector_database_watermarking_spark.watermark.tvp import (
     classify_compat,
     rs_embed,
     tvp_embed,
+    tvp_embed_with_ai,
     tvp_extract,
 )
 
@@ -101,3 +102,30 @@ def test_rs_roundtrip_and_determinism(spark, sf_dir):
     assert sorted(r["vec_id"] for r in carriers.collect()) == sorted(
         r["vec_id"] for r in carriers2.collect()
     )
+
+
+def _plan_node_names(node):
+    """Every node name in a physical plan, descending into subqueries
+    and cached relations (``innerChildren``) and through the AQE
+    wrappers, whose current plan hangs off ``executedPlan``/``plan``."""
+    name = node.nodeName()
+    kids = [seq.apply(i) for seq in (node.children(), node.innerChildren()) for i in range(seq.size())]
+    if name == "AdaptiveSparkPlan":
+        kids.append(node.executedPlan())
+    elif name.endswith("QueryStage"):
+        kids.append(node.plan())
+    return [name] + [n for kid in kids for n in _plan_node_names(kid)]
+
+
+def test_tvp_embed_classifies_once(spark, sf_dir):
+    """Carrier selection evaluates the compat classification UDF in one
+    place: the deficit counts and the AI threshold are window
+    aggregates over one ``group_id`` partitioning, not joins that would
+    re-run the classified subtree once per branch."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    _, carriers, _ = tvp_embed_with_ai(emb, WM, 0.7, 0.8, seed=SEED)
+    plan = carriers._jdf.queryExecution().executedPlan()
+    assert _plan_node_names(plan).count("ArrowEvalPython") == 1
+    carriers.collect()  # and the same once the adaptive plan has run
+    plan = carriers._jdf.queryExecution().executedPlan()
+    assert _plan_node_names(plan).count("ArrowEvalPython") == 1

@@ -40,6 +40,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    if sf_dir in ("-h", "--help") or not os.path.isdir(sf_dir):
+        print(__doc__)
+        return 2
     only = set(sys.argv[2:])
     spark = get_spark("oracle_check", cpus=8)
     con = duck_con(sf_dir)

@@ -51,8 +51,17 @@ def main() -> int:
             t_old = old.get("queries", {}).get(q)
             if t_old is None:
                 continue
+            if not t_new or not t_old:
+                print(f"skipping {q}: zero time", file=sys.stderr)
+                continue
+            if not sent.get(q):
+                print(f"skipping {q}: no sentinel", file=sys.stderr)
+                continue
             burst = sent[q] / med  # >1: this row measured in a burst
             rows.append((t_old / t_new, t_old / (t_new / burst), burst, q, t_old, t_new))
+        if not rows:
+            print("no query in common with a time and a sentinel", file=sys.stderr)
+            return 1
         rows.sort()
         print(f"{'query':28s} {'old':>7s} {'new':>7s} {'raw':>6s} {'norm':>6s} {'burst':>6s}")
         for raw, norm, burst, q, t_old, t_new in rows:
@@ -65,7 +74,10 @@ def main() -> int:
     else:
         print(f"{'query':28s} {'sec':>7s} {'sentinel':>8s} {'burst':>6s}")
         for q, t in sorted(new["queries"].items(), key=lambda kv: -kv[1]):
-            print(f"{q:28s} {t:7.3f} {sent[q]:8.3f} {sent[q] / med:6.2f}")
+            if sent.get(q):
+                print(f"{q:28s} {t:7.3f} {sent[q]:8.3f} {sent[q] / med:6.2f}")
+            else:
+                print(f"{q:28s} {t:7.3f} {'-':>8s} {'-':>6s}")
     return 0
 
 

@@ -43,7 +43,6 @@ def knn_join(
     exclude_self: bool = True,
     bucket_length: float | None = None,
     num_hash_tables: int = 10,
-    fold_parity: bool = True,
     candidate_budget: int | None = 100_000_000,
 ) -> DataFrame:
     """Top-k nearest base vectors for every query vector.
@@ -56,16 +55,12 @@ def knn_join(
     Arrow batch of queries computes its distance block vectorized in
     numpy (``mapInPandas``), emitting only the per-query top-k — the
     O(n²) pair relation is never materialized and no shuffle carries
-    it. Distances accumulate dimension-by-dimension in float64, which
-    is bit-identical to a sequential fold over ``(a_i − b_i)²``
-    (matching both the HOF formulation and the DuckDB oracle), so
-    rankings are reproducible across tiers and engines.
-
-    ``fold_parity=False`` swaps the per-dim fold for one Gram matmul
-    (|q−b|² = |q|² + |b|² − 2·q·b) — measured 3.7× end-to-end at a
-    20k base (80 s → 22 s), rank-for-rank identical on the fixtures.
-    Still EXACT nearest neighbors; only the last-ulp float identity
-    with the SQL oracle is given up, so graded paths keep the default.
+    it. One Gram matmul screens the candidates and only the survivors
+    (about k per query) are recomputed dimension-by-dimension in
+    float64, so reported distances are bit-identical to a sequential
+    fold over ``(a_i − b_i)²`` (matching both the HOF formulation and
+    the DuckDB oracle) and rankings are reproducible across tiers and
+    engines (:func:`_topk_chunk` proves the screen loses no neighbor).
 
     LSH tier duplicate hardening: real corpora contain duplicate and
     near-duplicate embeddings at scale (reposts, boilerplate, jittered
@@ -113,7 +108,7 @@ def knn_join(
     pass the same budget easily.
     """
     if exact:
-        return exact_knn(queries, base, k, exclude_self, fold_parity=fold_parity)
+        return exact_knn(queries, base, k, exclude_self)
 
     from pyspark.ml.functions import vector_to_array
 
@@ -246,7 +241,6 @@ def exact_knn(
     k: int,
     exclude_self: bool = True,
     n_base: int | None = None,
-    fold_parity: bool = True,
 ) -> DataFrame:
     """Exact kNN with automatic tier choice: single broadcast of the
     base when it fits (``MAX_BROADCAST_ROWS``), otherwise the base is
@@ -259,18 +253,13 @@ def exact_knn(
         rows = probe_collect(base.select("vec_id", "embedding"))
         if rows is not None:
             return _exact_knn_broadcast(
-                queries, base, k, exclude_self, pre_rows=rows,
-                fold_parity=fold_parity,
+                queries, base, k, exclude_self, pre_rows=rows
             )
         n_base = base.count()
     if n_base <= MAX_BROADCAST_ROWS:
-        return _exact_knn_broadcast(
-            queries, base, k, exclude_self, fold_parity=fold_parity
-        )
+        return _exact_knn_broadcast(queries, base, k, exclude_self)
     n_blocks = -(-n_base // MAX_BROADCAST_ROWS)
-    return _exact_knn_blocked(
-        queries, base, k, exclude_self, n_blocks, fold_parity=fold_parity
-    )
+    return _exact_knn_blocked(queries, base, k, exclude_self, n_blocks)
 
 
 def _exact_knn_blocked(
@@ -279,17 +268,13 @@ def _exact_knn_blocked(
     k: int,
     exclude_self: bool,
     n_blocks: int,
-    fold_parity: bool = True,
 ) -> DataFrame:
     """Blocked exact kNN: hash-split the base, per-block broadcast
     top-k, then a global merge ranked by the same
     ``(round(dist_sq, 6), dst)`` key so results are bit-identical to
     the single-broadcast tier."""
     blocks = [
-        _exact_knn_broadcast(
-            queries, block, k, exclude_self, emit_dist_sq=True,
-            fold_parity=fold_parity,
-        )
+        _exact_knn_broadcast(queries, block, k, exclude_self, emit_dist_sq=True)
         for block in split_blocks(base, n_blocks)
     ]
     union = blocks[0]
@@ -317,7 +302,6 @@ def _exact_knn_broadcast(
     exclude_self: bool,
     emit_dist_sq: bool = False,
     pre_rows: list | None = None,
-    fold_parity: bool = True,
 ) -> DataFrame:
     """Broadcast-base exact kNN via ``mapInPandas``.
 
@@ -325,7 +309,7 @@ def _exact_knn_broadcast(
     (~1e6 × d floats); ``exact_knn`` falls back to the blocked tier
     beyond that, and approximate workloads go through the LSH tier.
     The probe side is repartitioned so a single-file scan still uses
-    every core.
+    every core. The per-chunk kernel is :func:`_topk_chunk`.
     """
     import numpy as np
     import pandas as pd
@@ -345,96 +329,111 @@ def _exact_knn_broadcast(
     # (masked entries sort last and are dropped), so a query absent
     # from the base still gets all min(k, n) neighbors
     kk = min(k, len(ids))
-    col0 = "dist_sq" if emit_dist_sq else "dist"
+    col = "dist_sq" if emit_dist_sq else "dist"
     if kk <= 0:  # base empty: no neighbors
         return sess.createDataFrame(
-            [], schema=f"src long, dst long, {col0} double, rank int"
+            [], schema=f"src long, dst long, {col} double, rank int"
         )
 
     def topk(batches):
         b_ids, b_X = bc.value
-        n, d = b_X.shape
-        if not fold_parity:
-            bn = (b_X * b_X).sum(axis=1)
-        # bound working-set memory: three (chunk, n) float64 buffers
-        # (acc, diff, rounded copy) are live at once, so ~2e7 cells
-        # means ~0.5 GB peak per task regardless of Arrow batch size —
-        # a 10k-row batch against a 50k base would otherwise allocate
-        # multi-GB temporaries per dimension.
-        chunk = max(1, int(2e7 // max(n, 1)))
-        col = "dist_sq" if emit_dist_sq else "dist"
+        # bound working-set memory: the (chunk, n) Gram block and its
+        # partitioned copy are the largest live buffers, so ~2e7 cells
+        # means ~0.3 GB peak per task regardless of Arrow batch size
+        chunk = max(1, int(2e7 // max(len(b_ids), 1)))
         for pdf in batches:
             all_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             all_Q = np.array(list(pdf["embedding"]), dtype=np.float64)
             for s in range(0, len(all_ids), chunk):
-                q_ids = all_ids[s : s + chunk]
-                Q = all_Q[s : s + chunk]
-                m = len(q_ids)
-                if fold_parity:
-                    acc = np.zeros((m, n), dtype=np.float64)
-                    diff = np.empty((m, n), dtype=np.float64)
-                    for i in range(d):  # sequential per-dim accumulation = fold parity
-                        np.subtract(Q[:, i][:, None], b_X[:, i][None, :], out=diff)
-                        diff *= diff
-                        acc += diff
-                else:
-                    # BLAS tier: |q−b|² = |q|² + |b|² − 2·q·b via one
-                    # Gram matmul — measured 3.7× end to end at a 20k
-                    # base (80 s → 22 s; the kernel itself is ~25× but
-                    # selection/Arrow costs remain). Last-ulp
-                    # differences vs the fold can flip a 1e-6 rounding
-                    # boundary, so graded/oracle paths keep the
-                    # default fold tier; this one is for production
-                    # throughput where exact-but-not-bit-pinned
-                    # distances are fine.
-                    acc = Q @ b_X.T
-                    acc *= -2.0
-                    acc += (Q * Q).sum(axis=1)[:, None]
-                    acc += bn[None, :]
-                    np.maximum(acc, 0.0, out=acc)
-                r6 = np.round(acc, _RANK_DECIMALS)
-                if exclude_self:
-                    r6[q_ids[:, None] == b_ids[None, :]] = np.inf
-                out_src = np.repeat(q_ids, kk)
-                out_dst = np.empty(m * kk, dtype=np.int64)
-                out_val = np.empty(m * kk, dtype=np.float64)
-                out_key = np.empty(m * kk, dtype=np.float64)
-                out_rank = np.tile(np.arange(1, kk + 1, dtype=np.int32), m)
-                for r in range(m):
-                    if n > 4 * kk:
-                        # tie-safe pre-select: keep everything ≤ the max
-                        # of the 2kk smallest, so equal rounded values
-                        # still resolve by the b_id tiebreak exactly
-                        part = np.argpartition(r6[r], min(2 * kk, n - 1))[: 2 * kk]
-                        cand = np.nonzero(r6[r] <= r6[r][part].max())[0]
-                    else:
-                        cand = np.arange(n)
-                    order = np.lexsort((b_ids[cand], r6[r][cand]))[:kk]
-                    sel = cand[order]
-                    out_dst[r * kk : (r + 1) * kk] = b_ids[sel]
-                    out_key[r * kk : (r + 1) * kk] = r6[r, sel]
-                    vals = acc[r, sel]
-                    out_val[r * kk : (r + 1) * kk] = (
-                        vals if emit_dist_sq else np.sqrt(vals)
-                    )
-                # masked self-hits carry an inf ranking key and always
-                # sort last within a row: dropping them keeps ranks
-                # contiguous and gives rows not in the base their full
-                # min(k, n) neighbors
-                keep = np.isfinite(out_key)
-                yield pd.DataFrame(
-                    {
-                        "src": out_src[keep],
-                        "dst": out_dst[keep],
-                        col: out_val[keep],
-                        "rank": out_rank[keep],
-                    }
+                src, dst, d2, rank = _topk_chunk(
+                    all_ids[s : s + chunk], all_Q[s : s + chunk], b_ids, b_X,
+                    kk, exclude_self,
                 )
+                val = d2 if emit_dist_sq else np.sqrt(d2)
+                yield pd.DataFrame({"src": src, "dst": dst, col: val, "rank": rank})
 
-    col = "dist_sq" if emit_dist_sq else "dist"
     nparts = sess.sparkContext.defaultParallelism
     return queries.select("vec_id", "embedding").repartition(nparts).mapInPandas(
         topk, schema=f"src long, dst long, {col} double, rank int"
+    )
+
+
+def _topk_chunk(q_ids, Q, b_ids, b_X, kk: int, exclude_self: bool):
+    """Screen-then-refine exact top-kk of a query chunk against the
+    id-sorted base. Returns flat ``(src, dst, dist_sq, rank)`` arrays
+    equal, bit for bit, to the sequential float64 fold
+    ``f = Σ_i (q_i − b_i)²`` over every pair followed by a per-row
+    ``lexsort((ids, round(f, 6)))``; self-hits and non-finite keys sort
+    last and are dropped, so ranks stay contiguous.
+
+    1. Screen: one Gram matmul gives ``g = |q|² + |b|² − 2·q·b``;
+       self-hits and NaN become +inf.
+    2. Keep ``g ≤ T + 2δ + 2·10⁻⁶`` (T the row's kk-th smallest g; the
+       whole row when that bound is not finite).
+    3. Refine the survivors (about kk per row) with the fold, in a
+       padded (m × c) block.
+    4. Select the top kk with one ``lexsort`` along rows.
+
+    Why no neighbor is screened out. With ``u = 2⁻⁵³``,
+    ``γ_k = k·u/(1 − k·u)``, exact ``D = |q − b|²`` and
+    ``S = |q|² + max_j |b_j|² ≥ D/2`` (inputs are exact float64):
+    the fold rounds each term at most d + 2 times, so
+    ``|f − D| ≤ γ_{d+2}·D ≤ 2γ_{d+2}·S``; the three Gram dot products
+    (any BLAS order) err by ``γ_d`` times Σ|q_i·b_i| ≤ S/2, |q|² and
+    |b|², and the two additions round values below 2S, so
+    ``|g − D| ≤ 2γ_d·S + 4u·S ≤ 2γ_{d+2}·S``. Hence
+    ``|g − f| ≤ 4γ_{d+2}·S``. The kk smallest g all have
+    ``f ≤ T + 4γ_{d+2}·S``, so every true neighbor j has f at most that
+    or ties it after ``round(·, 6)``, which merges values less than
+    ``10⁻⁶ + 8u·S`` apart: ``g_j ≤ T + 8γ_{d+2}·S + 8u·S + 10⁻⁶``.
+    Evaluating the threshold in floats costs under 8u·S more, so
+    ``δ = 4γ_{d+4}·S`` (``2δ ≥ 8γ_{d+2}·S + 16u·S``) suffices, the
+    second 10⁻⁶ absorbing O(u²·S) terms.
+    """
+    import numpy as np
+
+    m, d = Q.shape
+    b_norms = (b_X * b_X).sum(axis=1)
+    finite = b_norms[np.isfinite(b_norms)]
+    q_norms = (Q * Q).sum(axis=1)
+    g = Q @ b_X.T
+    g *= -2.0
+    g += q_norms[:, None]
+    g += b_norms[None, :]
+    g[np.isnan(g)] = np.inf
+    if exclude_self:
+        g[q_ids[:, None] == b_ids[None, :]] = np.inf
+    T = np.partition(g, kk - 1, axis=1)[:, kk - 1]
+    gamma = (d + 4) * 2.0**-53 / (1 - (d + 4) * 2.0**-53)
+    S = q_norms + (finite.max() if finite.size else 0.0)
+    thr = T + 8 * gamma * S + 2e-6
+    thr[~np.isfinite(thr)] = np.inf
+    keep = g <= thr[:, None]
+    del g
+    # padded survivor block: unfilled slots keep an inf key, sort last
+    # and are dropped with the self-hits
+    counts = keep.sum(axis=1)
+    r_idx, c_idx = np.nonzero(keep)
+    slot = np.arange(len(r_idx)) - np.repeat(np.cumsum(counts) - counts, counts)
+    idx = np.zeros((m, int(counts.max())), dtype=np.int64)
+    idx[r_idx, slot] = c_idx
+    acc = np.zeros(idx.shape, dtype=np.float64)
+    for i in range(d):  # the fold, dimension by dimension
+        diff = Q[:, i][:, None] - b_X[:, i][idx]
+        diff *= diff
+        acc += diff
+    dst = b_ids[idx]
+    key = np.full(idx.shape, np.inf)
+    key[r_idx, slot] = np.round(acc[r_idx, slot], _RANK_DECIMALS)
+    if exclude_self:
+        key[dst == q_ids[:, None]] = np.inf
+    sel = np.lexsort((dst, key), axis=1)[:, :kk]
+    ok = np.isfinite(np.take_along_axis(key, sel, axis=1).ravel())
+    return (
+        np.repeat(q_ids, kk)[ok],
+        np.take_along_axis(dst, sel, axis=1).ravel()[ok],
+        np.take_along_axis(acc, sel, axis=1).ravel()[ok],
+        np.tile(np.arange(1, kk + 1, dtype=np.int32), m)[ok],
     )
 
 

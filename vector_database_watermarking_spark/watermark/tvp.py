@@ -97,23 +97,27 @@ def _with_wm_bit(cls: DataFrame, watermark: str) -> DataFrame:
     return cls.withColumn("wm_bit", F.element_at(wm_arr, F.col("group_id") + 1))
 
 
+def _deficit(n_total, n_have, strength: float):
+    """F5 deficit algebra (``watermarking.py:316-328``) as a column
+    expression: ``min(max(0, ceil(strength·n_total) − n_have),
+    n_total − n_have)``, the deficit capped at the available
+    (disagreeing) rows. The single home of the formula: the grouped
+    form (:func:`_group_stats`) and the window form
+    (:func:`_avail_from_classified`) both call it."""
+    need = F.ceil(F.lit(strength) * n_total).cast("long") - n_have
+    return F.least(F.greatest(F.lit(0), need), n_total - n_have)
+
+
 def _group_stats(cls_wm: DataFrame, strength: float) -> DataFrame:
-    """F5 deficit algebra (``watermarking.py:316-328``) per group:
-    (group_id, n_total, n_have, n_avail, deficit) with the deficit
-    capped at the available (disagreeing) rows. The single home of the
-    formula — selection and the carrier audit both consume it."""
+    """Per-group (group_id, n_total, n_have, deficit, n_avail) — the
+    carrier audit's view of the deficit algebra."""
     stats = cls_wm.groupBy("group_id").agg(
         F.count(F.lit(1)).alias("n_total"),
         F.sum((F.col("hidden_bit") == F.col("wm_bit")).cast("int")).alias("n_have"),
     )
-    stats = stats.withColumn(
-        "deficit",
-        F.greatest(
-            F.lit(0),
-            F.ceil(F.lit(strength) * F.col("n_total")).cast("long") - F.col("n_have"),
-        ),
+    return stats.withColumn(
+        "deficit", _deficit(F.col("n_total"), F.col("n_have"), strength)
     ).withColumn("n_avail", F.col("n_total") - F.col("n_have"))
-    return stats.withColumn("deficit", F.least(F.col("deficit"), F.col("n_avail")))
 
 
 def _avail_from_classified(cls: DataFrame, watermark: str, strength: float) -> DataFrame:
@@ -121,11 +125,27 @@ def _avail_from_classified(cls: DataFrame, watermark: str, strength: float) -> D
     already-classified DataFrame: attach the group's target bit,
     compute how many carriers each group still needs, and keep only the
     flippable rows. Classifier-agnostic (compat pandas-UDF tier or the
-    native parity tier feed the same deficit algebra)."""
-    cls = _with_wm_bit(cls, watermark)
-    stats = _group_stats(cls, strength)
-    return cls.filter(F.col("hidden_bit") != F.col("wm_bit")).join(
-        F.broadcast(stats.select("group_id", "deficit", "n_avail")), on="group_id"
+    native parity tier feed the same deficit algebra). The group
+    counts are window aggregates over the ``group_id`` partitioning
+    the selection windows reuse, so the classified relation is
+    evaluated once — a join against grouped stats would evaluate it
+    (and its classification UDF) once per join branch."""
+    w = Window.partitionBy("group_id")
+    cls = (
+        _with_wm_bit(cls, watermark)
+        .withColumn("_n_total", F.count(F.lit(1)).over(w))
+        .withColumn(
+            "_n_have",
+            F.sum((F.col("hidden_bit") == F.col("wm_bit")).cast("int")).over(w),
+        )
+    )
+    return (
+        cls.withColumn(
+            "deficit", _deficit(F.col("_n_total"), F.col("_n_have"), strength)
+        )
+        .withColumn("n_avail", F.col("_n_total") - F.col("_n_have"))
+        .filter(F.col("hidden_bit") != F.col("wm_bit"))
+        .drop("_n_total", "_n_have")
     )
 
 
@@ -147,21 +167,20 @@ def _select_by_ai(avail: DataFrame, th: float) -> DataFrame:
     iterates candidates in data order) up to the deficit. Tier 2
     (backfill, ``:234-244``): remaining rows in AI-descending order.
     """
-    w_ai = Window.partitionBy("group_id").orderBy(F.col("ai").desc(), F.col("vec_id"))
+    w_group = Window.partitionBy("group_id")
+    w_ai = w_group.orderBy(F.col("ai").desc(), F.col("vec_id"))
     avail = avail.withColumn("ai_rank", F.row_number().over(w_ai))
     thr_rank = F.floor(F.col("n_avail") * F.lit(th)).cast("long")
-
-    thr = (
-        avail.filter(F.col("ai_rank") == thr_rank)
-        .select("group_id", F.col("ai").alias("thr_ai"))
-    )
-    avail = avail.join(F.broadcast(thr), on="group_id", how="left").withColumn(
+    # the AI at the threshold rank, spread over its group (null when no
+    # row holds that rank: everyone passes)
+    thr_ai = F.max(F.when(F.col("ai_rank") == thr_rank, F.col("ai"))).over(w_group)
+    avail = avail.withColumn("thr_ai", thr_ai).withColumn(
         "passer",
         F.when(F.col("thr_ai").isNull(), F.lit(True)).otherwise(
             F.col("ai") >= F.col("thr_ai")
         ),
     )
-    n_pass = F.sum(F.col("passer").cast("long")).over(Window.partitionBy("group_id"))
+    n_pass = F.sum(F.col("passer").cast("long")).over(w_group)
     avail = avail.withColumn("n_pass", n_pass)
 
     w_tier = Window.partitionBy("group_id", "passer")
@@ -316,11 +335,9 @@ def tvp_carrier_invariants(
     dims = key_dims(d, seed)
     L = len(watermark)
 
-    cls = _with_wm_bit(classify_compat(emb, dims, L), watermark)
-    stats = _group_stats(cls, strength)
-    avail = cls.filter(F.col("hidden_bit") != F.col("wm_bit")).join(
-        F.broadcast(stats.select("group_id", "deficit", "n_avail")), on="group_id"
-    )
+    cls = classify_compat(emb, dims, L)
+    stats = _group_stats(_with_wm_bit(cls, watermark), strength)
+    avail = _avail_from_classified(cls, watermark, strength)
     edges = knn_edges(emb.select("vec_id", "embedding"), k=knn_k)
     ai = accessibility_index(edges, emb).select("vec_id", "ai")
     # carriers feeds the per-group count AND the embedding pass, and
