@@ -40,3 +40,22 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf001_dir():
     return SF001
+
+
+def _plan_node_names(node):
+    """Every node name in a logical or physical plan, descending into
+    subqueries and cached relations (``innerChildren``) and through the
+    AQE wrappers, whose current plan hangs off ``executedPlan``/``plan``."""
+    name = node.nodeName()
+    kids = [seq.apply(i) for seq in (node.children(), node.innerChildren()) for i in range(seq.size())]
+    if name == "AdaptiveSparkPlan":
+        kids.append(node.executedPlan())
+    elif name.endswith("QueryStage"):
+        kids.append(node.plan())
+    return [name] + [n for kid in kids for n in _plan_node_names(kid)]
+
+
+@pytest.fixture(scope="session")
+def plan_node_names():
+    """Structural plan assertions walk nodes, not plan strings."""
+    return _plan_node_names

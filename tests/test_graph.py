@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from vector_database_watermarking_spark.operators import graph, knn
@@ -308,3 +309,31 @@ def test_mutual_edges_match_reverse_semi_join(spark, sf_dir):
         [(7, 8), (7, 8)], "src long, dst long"
     )
     assert graph.mutual_undirected(one_way_dup, dedup=True).count() == 0
+
+
+def test_unique_edges_matches_default_path(spark, sf_dir):
+    """``unique_edges=True`` (the one-pass canonical-pair count) and the
+    default flipped-key join agree in ``bidirectional_edge_counts`` and
+    ``accessibility_index`` — on the real kNN edge table and on a
+    crafted table with a self-loop (kept as an edge length, never
+    mutual), a one-way edge and a mutual pair."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    knn_edges = knn.knn_edges(emb, k=5).localCheckpoint(eager=True)
+    crafted = spark.createDataFrame(
+        [(1, 1, 0.5), (1, 2, 1.0), (2, 1, 3.0), (2, 3, 2.0)],
+        "src long, dst long, dist double",
+    )
+    crafted_nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "vec_id long")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for edges, nodes in [(knn_edges, emb.select("vec_id")), (crafted, crafted_nodes)]:
+        for op in (graph.bidirectional_edge_counts, graph.accessibility_index):
+            default = rows(op(edges, nodes))
+            unique = rows(op(edges, nodes, unique_edges=True))
+            # the float columns aggregate in plan order: equal to ~1 ulp
+            assert [r[:2] for r in unique] == [r[:2] for r in default]
+            assert unique == [pytest.approx(r, rel=1e-12) for r in default]
+    got = rows(graph.accessibility_index(crafted, crafted_nodes))
+    assert [r[:3] for r in got] == [(1, 1, 0.75), (2, 1, 2.5), (3, 0, None), (4, 0, None)]

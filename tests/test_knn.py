@@ -70,28 +70,6 @@ def test_lsh_tier_recall(spark, sf_dir):
     assert recall > 0.5, recall
 
 
-def test_blocked_exact_knn_matches_broadcast(spark, sf_dir):
-    """The blocked tier (base split into broadcastable chunks + merge)
-    must produce bit-identical edges to the single-broadcast tier."""
-    from vector_database_watermarking_spark.operators.knn import (
-        _exact_knn_blocked,
-        _exact_knn_broadcast,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    a = sorted(
-        (r["src"], r["rank"], r["dst"], round(r["dist"], 9))
-        for r in _exact_knn_broadcast(emb, emb, 5, True).collect()
-    )
-    b = sorted(
-        (r["src"], r["rank"], r["dst"], round(r["dist"], 9))
-        for r in _exact_knn_blocked(emb, emb, 5, True, n_blocks=4).collect()
-    )
-    assert a == b
-
-
 def test_knn_single_row_base_returns_empty(spark):
     """kk==0 edge (1-row base with self-exclusion) must yield an empty
     result, not crash (regression: argpartition on empty selection)."""
@@ -121,35 +99,6 @@ def test_disjoint_queries_get_full_k(spark):
     assert len(out2) == 3
     assert all(r["dst"] != 2 for r in out2)
     assert [r["rank"] for r in sorted(out2, key=lambda r: r["rank"])] == [1, 2, 3]
-
-
-def test_cosine_topk_blocked_matches_broadcast(spark, sf_dir):
-    """The blocked cosine tier must match the broadcast tier exactly
-    (same guarantee the euclidean kNN blocked tier has)."""
-    from vector_database_watermarking_spark.operators.similarity import (
-        _cosine_topk_broadcast,
-        cosine_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    a = sorted(
-        (r["src"], r["rank"], r["dst"], round(r["cos_sim"], 9))
-        for r in _cosine_topk_broadcast(emb, emb, 5, True).collect()
-    )
-    import vector_database_watermarking_spark.operators.knn as knn_mod
-
-    saved = knn_mod.MAX_BROADCAST_ROWS
-    knn_mod.MAX_BROADCAST_ROWS = 100  # force the blocked tier
-    try:
-        b = sorted(
-            (r["src"], r["rank"], r["dst"], round(r["cos_sim"], 9))
-            for r in cosine_topk(emb, emb, 5).collect()
-        )
-    finally:
-        knn_mod.MAX_BROADCAST_ROWS = saved
-    assert a == b
 
 
 def test_lsh_dense_cluster_queries_still_get_candidates(spark):
@@ -253,7 +202,7 @@ def _fixture_rows(spark, sf):
 def test_screened_kernel_matches_fold_on_fixture(spark, sf001_dir, monkeypatch, tier):
     """Bit parity on the sf0.01 fixture, through the broadcast tier and
     through the blocked tier (forced as in
-    ``test_cosine_topk_blocked_matches_broadcast``)."""
+    ``test_similarity.py::test_scorer_tiers_match``)."""
     if tier == "blocked":
         monkeypatch.setattr(knn, "MAX_BROADCAST_ROWS", 100)
     rows = _fixture_rows(spark, sf001_dir)

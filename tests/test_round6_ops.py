@@ -53,7 +53,7 @@ def test_bfs_hops_matches_brute_force(spark):
     assert 61 not in got and 62 not in got
 
 
-def test_bfs_hops_bounded_lineage(spark):
+def test_bfs_hops_bounded_lineage(spark, plan_node_names):
     """Pins the BFS loop's lineage mechanism (VERDICT r13 #6): every
     level IS eagerly localCheckpointed inside the loop (graph.bfs_hops
     — ``nxt.localCheckpoint(eager=True)``), so the returned union
@@ -66,10 +66,10 @@ def test_bfs_hops_bounded_lineage(spark):
     e_df = spark.createDataFrame(e, ["src", "dst"])
     s_df = spark.createDataFrame([(0,)], ["vec_id"])
     out = graph.bfs_hops(e_df, s_df, max_hops=5)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-    assert "Join" not in plan, plan
+    nodes = plan_node_names(out._jdf.queryExecution().optimizedPlan())  # noqa: SLF001
+    assert "Join" not in nodes, nodes
     # seed level + 5 hop levels, each a checkpointed RDD scan
-    assert plan.count("LogicalRDD") == 6, plan
+    assert nodes.count("LogicalRDD") == 6, nodes
     got = {r["vec_id"]: r["hops"] for r in out.collect()}
     assert got == {i: i for i in range(6)}
 

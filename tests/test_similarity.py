@@ -1,6 +1,68 @@
 """Similarity-search operator tests (SQ tier)."""
 
+import pytest
 from pyspark.sql import functions as F
+
+from vector_database_watermarking_spark.operators import knn, similarity
+
+#: the four brute-force scorers on the ``knn.blocked_topk`` driver, at
+#: their registered configurations, with the column they score by
+SCORERS = {
+    "exact_knn": (lambda q, b: knn.exact_knn(q, b, 5), "dist"),
+    "cosine_topk": (lambda q, b: similarity.cosine_topk(q, b, 5), "cos_sim"),
+    "sq_topk": (lambda q, b: similarity.sq_topk(q, b, k=5, refine=20), "dist"),
+    "pq_topk": (
+        lambda q, b: similarity.pq_topk(q, b, k=5, refine=50, m=16, nbits=6),
+        "dist",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(SCORERS))
+def test_scorer_tiers_match(spark, sf_dir, monkeypatch, name):
+    """Every scorer returns the same rows, value bits included, from
+    the one-block broadcast tier and from the hash-split blocks forced
+    by shrinking the broadcast cap below the 500-row fixture."""
+    score, col = SCORERS[name]
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    queries = emb.filter(F.col("vec_id") < 120)
+    n_blocks = []
+    driver = knn.blocked_topk
+
+    def spy(*args, **kwargs):
+        out, n = driver(*args, **kwargs)
+        n_blocks.append(n)
+        return out, n
+
+    monkeypatch.setattr(knn, "blocked_topk", spy)
+
+    def run():
+        return sorted(
+            (r["src"], r["rank"], r["dst"], r[col].hex())
+            for r in score(queries, emb).collect()
+        )
+
+    broadcast = run()
+    monkeypatch.setattr(knn, "MAX_BROADCAST_ROWS", 100)
+    assert run() == broadcast
+    assert n_blocks == [1, 5]
+    assert len(broadcast) == 120 * 5
+
+
+@pytest.mark.parametrize("name", list(SCORERS))
+def test_scorers_on_empty_base(spark, sf_dir, name):
+    """An empty base gives every scorer an empty result with its usual
+    columns (SQ and PQ used to crash in the bounds and the worker)."""
+    score, col = SCORERS[name]
+    queries = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = score(queries, empty)
+    assert out.columns == ["src", "dst", col, "rank"]
+    assert out.collect() == []
 
 
 def test_sq_topk_recall_and_codes(spark, sf_dir):
@@ -45,11 +107,10 @@ def test_pq_topk_recall_codes_and_tiers(spark, sf_dir):
     """PQ ADC scan + exact rerank must (a) emit codes within the
     codebook range, (b) recover >= 0.9 of the exact top-k at the
     registered configuration (m=16, 64 centroids, refine=50), (c)
-    return exactly k rows per query, and (d) produce identical output
-    from the broadcast and hash-split block tiers."""
+    return exactly k rows per query; tier parity is
+    ``test_scorer_tiers_match[pq_topk]``."""
     import numpy as np
 
-    from vector_database_watermarking_spark.operators import knn
     from vector_database_watermarking_spark.operators.similarity import (
         _pq_encode,
         _pq_subspace_mic,
@@ -84,25 +145,9 @@ def test_pq_topk_recall_codes_and_tiers(spark, sf_dir):
     recall = len(pq_pairs & exact_pairs) / len(exact_pairs)
     assert recall >= 0.9, recall
 
-    broadcast = sorted(
-        (r["src"], r["dst"], round(r["dist"], 6), r["rank"]) for r in got
-    )
-    orig = knn.MAX_BROADCAST_ROWS
-    try:
-        knn.MAX_BROADCAST_ROWS = 100  # force the hash-split block tier
-        blocked = sorted(
-            (r["src"], r["dst"], round(r["dist"], 6), r["rank"])
-            for r in pq_topk(queries, emb, k=5, refine=50, m=16, nbits=6).collect()
-        )
-    finally:
-        knn.MAX_BROADCAST_ROWS = orig
-    assert broadcast == blocked
-
     # nbits past the uint8 code range must refuse loudly, not wrap
     # (ADVICE round 12: _pq_encode stores argmin indices as uint8, so
     # ksub > 256 would silently truncate codes into wrong neighbors)
-    import pytest
-
     with pytest.raises(ValueError, match="uint8"):
         pq_topk(queries, emb, k=5, refine=50, m=16, nbits=9)
 

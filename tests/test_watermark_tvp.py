@@ -104,20 +104,7 @@ def test_rs_roundtrip_and_determinism(spark, sf_dir):
     )
 
 
-def _plan_node_names(node):
-    """Every node name in a physical plan, descending into subqueries
-    and cached relations (``innerChildren``) and through the AQE
-    wrappers, whose current plan hangs off ``executedPlan``/``plan``."""
-    name = node.nodeName()
-    kids = [seq.apply(i) for seq in (node.children(), node.innerChildren()) for i in range(seq.size())]
-    if name == "AdaptiveSparkPlan":
-        kids.append(node.executedPlan())
-    elif name.endswith("QueryStage"):
-        kids.append(node.plan())
-    return [name] + [n for kid in kids for n in _plan_node_names(kid)]
-
-
-def test_tvp_embed_classifies_once(spark, sf_dir):
+def test_tvp_embed_classifies_once(spark, sf_dir, plan_node_names):
     """Carrier selection evaluates the compat classification UDF in one
     place: the deficit counts and the AI threshold are window
     aggregates over one ``group_id`` partitioning, not joins that would
@@ -125,7 +112,7 @@ def test_tvp_embed_classifies_once(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     _, carriers, _ = tvp_embed_with_ai(emb, WM, 0.7, 0.8, seed=SEED)
     plan = carriers._jdf.queryExecution().executedPlan()
-    assert _plan_node_names(plan).count("ArrowEvalPython") == 1
+    assert plan_node_names(plan).count("ArrowEvalPython") == 1
     carriers.collect()  # and the same once the adaptive plan has run
     plan = carriers._jdf.queryExecution().executedPlan()
-    assert _plan_node_names(plan).count("ArrowEvalPython") == 1
+    assert plan_node_names(plan).count("ArrowEvalPython") == 1

@@ -87,7 +87,9 @@ def bidirectional_edge_counts(
     (J1 note): bidirectional edge ≡ mutual-kNN pair.
 
     Default: left-semi self-join on the flipped key; nodes with no
-    mutual edges get 0 (the reference's loop yields 0 naturally).
+    mutual edges get 0 (the reference's loop yields 0 naturally). A
+    self-loop ``(u,u)`` is not a mutual pair in either form — kNN edge
+    tables never hold one (self-hits are excluded).
 
     ``unique_edges=True`` (optimization round 14): for input unique
     per ``(src, dst)`` — every kNN edge table is — the per-node count
@@ -104,7 +106,9 @@ def bidirectional_edge_counts(
     if unique_edges:
         mutual = mutual_edges(e)
     else:
-        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        rev = edges.filter(F.col("src") != F.col("dst")).select(
+            F.col("dst").alias("src"), F.col("src").alias("dst")
+        )
         mutual = e.join(rev, on=["src", "dst"], how="left_semi")
     counts = mutual.groupBy("src").agg(F.count(F.lit(1)).alias("bidir_edges"))
     return (
@@ -224,10 +228,13 @@ def accessibility_index(
         # out the left join (it would double-count the row in BOTH
         # metrics); with distinct, semantics match the original
         # left_semi + raw-edge average for any input, duplicates
-        # included
-        rev = edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        ).dropDuplicates(["src", "dst"]).withColumn("_mutual", F.lit(1))
+        # included; a self-loop keeps its length but is not mutual
+        rev = (
+            edges.filter(F.col("src") != F.col("dst"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            .dropDuplicates(["src", "dst"])
+            .withColumn("_mutual", F.lit(1))
+        )
         flagged = edges.select("src", "dst", dist.alias("_dist")).join(
             rev, on=["src", "dst"], how="left"
         )

@@ -22,6 +22,8 @@ candidates, not all pairs.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -51,11 +53,14 @@ def knn_join(
     ``(src, dst, dist, rank)`` with ``rank`` 1-based by ascending
     euclidean distance (ties by ``dst``). ``src`` is the query's id.
 
-    Exact tier: the base side is broadcast to every task and each
-    Arrow batch of queries computes its distance block vectorized in
-    numpy (``mapInPandas``), emitting only the per-query top-k — the
-    O(n²) pair relation is never materialized and no shuffle carries
-    it. One Gram matmul screens the candidates and only the survivors
+    Exact tier (:func:`exact_knn` under the :func:`blocked_topk`
+    driver): each broadcastable block of the base — the whole base
+    when it fits — is broadcast to every task and each Arrow batch of
+    queries computes its distance block vectorized in numpy
+    (``mapInPandas``), emitting only the per-query top-k — the O(n²)
+    pair relation is never materialized and no shuffle carries it;
+    more than one block adds a per-query merge window. One Gram
+    matmul screens the candidates and only the survivors
     (about k per query) are recomputed dimension-by-dimension in
     float64, so reported distances are bit-identical to a sequential
     fold over ``(a_i − b_i)²`` (matching both the HOF formulation and
@@ -227,12 +232,64 @@ def probe_collect(base: DataFrame) -> list | None:
     return rows if len(rows) <= MAX_BROADCAST_ROWS else None
 
 
-def split_blocks(base: DataFrame, n_blocks: int) -> list[DataFrame]:
-    """Hash-split a (vec_id, ...) relation into ``n_blocks`` disjoint
-    slices — shared by the blocked exact tiers (euclidean + cosine) so
-    both bound driver memory by one block."""
+def blocked_topk(
+    base: DataFrame,
+    block_fn,
+    schema: str,
+    n_base: int | None = None,
+    rows: list | None = None,
+) -> tuple[DataFrame, int]:
+    """The one tier driver of the four brute-force top-k scorers:
+    :func:`exact_knn` here, and ``cosine_topk``, ``sq_topk`` and
+    ``pq_topk`` in ``similarity``.
+
+    Sizes the base from the caller's probed ``rows``, else ``n_base``,
+    else its own :func:`probe_collect` falling back to a ``count()``,
+    and calls ``block_fn(block, block_rows, n_blocks)`` once per
+    broadcastable block: on the whole base with the probed rows (or
+    ``None``) while it fits ``MAX_BROADCAST_ROWS`` — broadcast is the
+    one-block case — else on ``ceil(n / MAX_BROADCAST_ROWS)`` disjoint
+    ``pmod(vec_id, n_blocks)`` slices with ``None``, unioning their
+    outputs, so driver memory stays bounded by one block. Returns the
+    output and the block count; the caller merges the block-local
+    top-ks (the global top-k is a subset of their union). An empty
+    base yields an empty ``schema`` frame and 0 blocks, and
+    ``block_fn`` never runs.
+    """
+    if rows is None and n_base is None:
+        rows = probe_collect(base.select("vec_id", "embedding"))
+        if rows is None:
+            n_base = base.count()
+    if rows is not None:
+        n_base = len(rows)
+    if n_base == 0:
+        return base.sparkSession.createDataFrame([], schema=schema), 0
+    n_blocks = -(-n_base // MAX_BROADCAST_ROWS)
+    if n_blocks == 1:
+        return block_fn(base, rows, 1), 1
     block_col = F.pmod(F.col("vec_id"), F.lit(n_blocks))
-    return [base.filter(block_col == b) for b in range(n_blocks)]
+    parts = [
+        block_fn(base.filter(block_col == b), None, n_blocks)
+        for b in range(n_blocks)
+    ]
+    return reduce(DataFrame.unionByName, parts), n_blocks
+
+
+def sorted_base(base: DataFrame, *cols: str, rows: list | None = None) -> tuple:
+    """Driver-side preamble of every broadcast block: the base's
+    ``(vec_id, *cols)`` rows — ``rows`` when the caller already probed
+    them, else one collect — as an id-ascending int64 id array followed
+    by one float64 matrix per column (``cols`` defaults to
+    ``embedding``)."""
+    import numpy as np
+
+    cols = cols or ("embedding",)
+    if rows is None:
+        rows = base.select("vec_id", *cols).collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    order = np.argsort(ids)
+    mats = (np.array([r[c] for r in rows], dtype=np.float64)[order] for c in cols)
+    return (ids[order], *mats)
 
 
 def exact_knn(
@@ -241,50 +298,34 @@ def exact_knn(
     k: int,
     exclude_self: bool = True,
     n_base: int | None = None,
+    rows: list | None = None,
 ) -> DataFrame:
-    """Exact kNN with automatic tier choice: single broadcast of the
-    base when it fits (``MAX_BROADCAST_ROWS``), otherwise the base is
-    split into broadcastable blocks, each block contributes a local
-    top-k, and a final per-query window merges them — identical output
-    (the global top-k is a subset of the union of block top-ks), driver
-    memory bounded by one block.
+    """Exact kNN through :func:`blocked_topk`: each block runs the
+    screened kernel :func:`_topk_chunk` under :func:`broadcast_topk`.
+    One block (the base fits ``MAX_BROADCAST_ROWS``) is the answer
+    as is; past it the block-local top-ks carry ``dist_sq`` and a
+    per-query window re-ranks them by the same ``(round(dist_sq, 6),
+    dst)`` key — bit-identical output at any block count. ``rows`` are
+    the base's probed ``(vec_id, embedding)`` rows, when the caller
+    already holds them.
     """
-    if n_base is None:
-        rows = probe_collect(base.select("vec_id", "embedding"))
-        if rows is not None:
-            return _exact_knn_broadcast(
-                queries, base, k, exclude_self, pre_rows=rows
-            )
-        n_base = base.count()
-    if n_base <= MAX_BROADCAST_ROWS:
-        return _exact_knn_broadcast(queries, base, k, exclude_self)
-    n_blocks = -(-n_base // MAX_BROADCAST_ROWS)
-    return _exact_knn_blocked(queries, base, k, exclude_self, n_blocks)
 
+    def block(blk, blk_rows, n_blocks):
+        chunk_fn, col = (
+            (_topk_dist_chunk, "dist") if n_blocks == 1 else (_topk_chunk, "dist_sq")
+        )
+        return broadcast_topk(queries, blk, blk_rows, chunk_fn, k, exclude_self, col)
 
-def _exact_knn_blocked(
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    exclude_self: bool,
-    n_blocks: int,
-) -> DataFrame:
-    """Blocked exact kNN: hash-split the base, per-block broadcast
-    top-k, then a global merge ranked by the same
-    ``(round(dist_sq, 6), dst)`` key so results are bit-identical to
-    the single-broadcast tier."""
-    blocks = [
-        _exact_knn_broadcast(queries, block, k, exclude_self, emit_dist_sq=True)
-        for block in split_blocks(base, n_blocks)
-    ]
-    union = blocks[0]
-    for df in blocks[1:]:
-        union = union.unionByName(df)
+    out, n_blocks = blocked_topk(
+        base, block, "src long, dst long, dist double, rank int", n_base, rows
+    )
+    if n_blocks <= 1:
+        return out
     w = Window.partitionBy("src").orderBy(
         F.round(F.col("dist_sq"), _RANK_DECIMALS).asc(), F.col("dst").asc()
     )
     return (
-        union.withColumn("rank", F.row_number().over(w))
+        out.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             "src",
@@ -295,67 +336,63 @@ def _exact_knn_blocked(
     )
 
 
-def _exact_knn_broadcast(
+def broadcast_topk(
     queries: DataFrame,
     base: DataFrame,
+    rows: list | None,
+    chunk_fn,
     k: int,
     exclude_self: bool,
-    emit_dist_sq: bool = False,
-    pre_rows: list | None = None,
+    col: str,
 ) -> DataFrame:
-    """Broadcast-base exact kNN via ``mapInPandas``.
+    """One broadcast block of the exact scorers (L2 and cosine): the
+    id-sorted block (:func:`sorted_base`) is broadcast and
+    ``mapInPandas`` runs ``chunk_fn(q_ids, Q, b_ids, b_X, kk,
+    exclude_self)`` over every query Arrow batch, returning flat
+    ``(src, dst, <col>, rank)`` arrays. ``kk`` caps at the block size;
+    self-hits are masked per row, so a query absent from the base
+    still gets all min(k, n) neighbors.
 
-    Scale notes: correct while the base side fits in a broadcast
-    (~1e6 × d floats); ``exact_knn`` falls back to the blocked tier
-    beyond that, and approximate workloads go through the LSH tier.
-    The probe side is repartitioned so a single-file scan still uses
-    every core. The per-chunk kernel is :func:`_topk_chunk`.
+    Scale notes: the probe side is repartitioned so a single-file scan
+    still uses every core, and each batch runs in chunks of at most
+    2e7 (chunk, n) cells — 0.16 GB per float64 buffer per task,
+    regardless of Arrow batch size.
     """
     import numpy as np
     import pandas as pd
 
     sess = queries.sparkSession
-    rows = (
-        pre_rows
-        if pre_rows is not None
-        else base.select("vec_id", "embedding").collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, X = ids[order], X[order]
+    ids, X = sorted_base(base, rows=rows)
     bc = sess.sparkContext.broadcast((ids, X))
-    # kk caps at the base size; self-exclusion is handled per row
-    # (masked entries sort last and are dropped), so a query absent
-    # from the base still gets all min(k, n) neighbors
     kk = min(k, len(ids))
-    col = "dist_sq" if emit_dist_sq else "dist"
-    if kk <= 0:  # base empty: no neighbors
-        return sess.createDataFrame(
-            [], schema=f"src long, dst long, {col} double, rank int"
-        )
+    schema = f"src long, dst long, {col} double, rank int"
 
     def topk(batches):
         b_ids, b_X = bc.value
-        # bound working-set memory: the (chunk, n) Gram block and its
-        # partitioned copy are the largest live buffers, so ~2e7 cells
-        # means ~0.3 GB peak per task regardless of Arrow batch size
         chunk = max(1, int(2e7 // max(len(b_ids), 1)))
         for pdf in batches:
             all_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             all_Q = np.array(list(pdf["embedding"]), dtype=np.float64)
             for s in range(0, len(all_ids), chunk):
-                src, dst, d2, rank = _topk_chunk(
+                out = chunk_fn(
                     all_ids[s : s + chunk], all_Q[s : s + chunk], b_ids, b_X,
                     kk, exclude_self,
                 )
-                val = d2 if emit_dist_sq else np.sqrt(d2)
-                yield pd.DataFrame({"src": src, "dst": dst, col: val, "rank": rank})
+                yield pd.DataFrame(dict(zip(("src", "dst", col, "rank"), out)))
 
     nparts = sess.sparkContext.defaultParallelism
     return queries.select("vec_id", "embedding").repartition(nparts).mapInPandas(
-        topk, schema=f"src long, dst long, {col} double, rank int"
+        topk, schema=schema
     )
+
+
+def _topk_dist_chunk(q_ids, Q, b_ids, b_X, kk: int, exclude_self: bool):
+    """:func:`_topk_chunk` reporting the distance instead of its
+    square — the single-block output needs no merge key."""
+    import numpy as np
+
+    src, dst, d2, rank = _topk_chunk(q_ids, Q, b_ids, b_X, kk, exclude_self)
+    return src, dst, np.sqrt(d2), rank
 
 
 def _topk_chunk(q_ids, Q, b_ids, b_X, kk: int, exclude_self: bool):
@@ -608,11 +645,9 @@ def knn_edges(emb: DataFrame, k: int, exact: bool | None = None) -> DataFrame:
     e = emb.select("vec_id", "embedding")
     if exact is None:
         rows = probe_collect(e)
-        if rows is not None:
-            return _exact_knn_broadcast(e, e, k, exclude_self=True, pre_rows=rows)
-        n = e.count()
+        n = len(rows) if rows is not None else e.count()
         if n <= MAX_EXACT_BASE_ROWS:
-            return exact_knn(e, e, k, exclude_self=True, n_base=n)
+            return exact_knn(e, e, k, exclude_self=True, n_base=n, rows=rows)
         exact = False
     return knn_join(e, e, k=k, exact=exact, exclude_self=True)
 

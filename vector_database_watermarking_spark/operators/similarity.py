@@ -12,6 +12,8 @@ never materializes. Centroids come from MLlib KMeans (seeded).
 
 from __future__ import annotations
 
+from functools import cache
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -32,30 +34,25 @@ def cosine_topk(
     """Exact cosine top-k: (src, dst, cos_sim, rank), rank 1-based by
     descending similarity, ties by dst.
 
-    Same tier dispatch as ``knn.exact_knn``: one broadcast of the base
-    while it fits (``knn.MAX_BROADCAST_ROWS``), otherwise hash-split
-    blocks each contribute a local top-k and a per-query window merges
-    them — no unconditional whole-base driver collect anywhere.
+    Tiers come from the ``knn.blocked_topk`` driver, as for
+    ``knn.exact_knn``: each block runs :func:`_cosine_chunk` under
+    ``knn.broadcast_topk``; one block (the base fits
+    ``knn.MAX_BROADCAST_ROWS``) is the answer as is, more add a
+    per-query merge window — no unconditional whole-base driver
+    collect anywhere.
     """
-    from .knn import MAX_BROADCAST_ROWS, probe_collect, split_blocks
+    from .knn import blocked_topk, broadcast_topk
 
-    if n_base is None:
-        rows = probe_collect(base.select("vec_id", "embedding"))
-        if rows is not None:
-            return _cosine_topk_broadcast(
-                queries, base, k, exclude_self, pre_rows=rows
-            )
-        n_base = base.count()
-    if n_base <= MAX_BROADCAST_ROWS:
-        return _cosine_topk_broadcast(queries, base, k, exclude_self)
-    n_blocks = -(-n_base // MAX_BROADCAST_ROWS)
-    blocks = [
-        _cosine_topk_broadcast(queries, block, k, exclude_self)
-        for block in split_blocks(base, n_blocks)
-    ]
-    union = blocks[0]
-    for df in blocks[1:]:
-        union = union.unionByName(df)
+    def block(blk, rows, _n_blocks):
+        return broadcast_topk(
+            queries, blk, rows, _cosine_chunk, k, exclude_self, "cos_sim"
+        )
+
+    out, n_blocks = blocked_topk(
+        base, block, "src long, dst long, cos_sim double, rank int", n_base
+    )
+    if n_blocks <= 1:
+        return out
     # NOTE (review round 12, accepted nuance): block-local selection
     # keys on np.round (binary half-even) while this merge keys on
     # F.round (HALF_UP on the shortest decimal repr). The modes differ
@@ -67,87 +64,41 @@ def cosine_topk(
         F.round(F.col("cos_sim"), _RANK_DECIMALS).desc(), F.col("dst").asc()
     )
     return (
-        union.withColumn("rank", F.row_number().over(w))
+        out.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("src", "dst", "cos_sim", F.col("rank").cast("int").alias("rank"))
     )
 
 
-def _cosine_topk_broadcast(
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    exclude_self: bool,
-    pre_rows: list | None = None,
-) -> DataFrame:
-    """Broadcast-base cosine top-k via ``mapInPandas``; per-dim
-    sequential accumulation keeps parity with the SQL fold."""
-    sess = queries.sparkSession
-    rows = (
-        pre_rows
-        if pre_rows is not None
-        else base.select("vec_id", "embedding").collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, X = ids[order], X[order]
-    bc = sess.sparkContext.broadcast((ids, X))
-    # self-hits are masked per row (−inf key, sorts last, dropped), so
-    # kk caps at the base size and disjoint queries keep min(k, n)
-    kk = min(k, len(ids))
-    if kk <= 0:
-        return sess.createDataFrame(
-            [], schema="src long, dst long, cos_sim double, rank int"
-        )
-
-    def topk(batches):
-        b_ids, b_X = bc.value
-        n, d = b_X.shape
-        chunk = max(1, int(2e7 // max(n, 1)))  # bound (chunk, n) buffers
-        bn = np.zeros((1, n))
-        for i in range(d):
-            bn[0, :] += b_X[:, i] * b_X[:, i]
-        bnorm = np.sqrt(bn)
-        for pdf in batches:
-            all_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            all_Q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            for s in range(0, len(all_ids), chunk):
-                q_ids = all_ids[s : s + chunk]
-                Q = all_Q[s : s + chunk]
-                m = len(q_ids)
-                dot = np.zeros((m, n))
-                qn = np.zeros((m, 1))
-                for i in range(d):  # sequential fold parity with SQL
-                    dot += Q[:, i : i + 1] * b_X[:, i][None, :]
-                    qn[:, 0] += Q[:, i] * Q[:, i]
-                cos = dot / (np.sqrt(qn) * bnorm)
-                r6 = np.round(cos, _RANK_DECIMALS)
-                if exclude_self:
-                    r6[q_ids[:, None] == b_ids[None, :]] = -np.inf
-                out_src = np.repeat(q_ids, kk)
-                out_dst = np.empty(m * kk, dtype=np.int64)
-                out_cos = np.empty(m * kk, dtype=np.float64)
-                out_key = np.empty(m * kk, dtype=np.float64)
-                out_rank = np.tile(np.arange(1, kk + 1, dtype=np.int32), m)
-                for r in range(m):
-                    sel = np.lexsort((b_ids, -r6[r]))[:kk]
-                    out_dst[r * kk : (r + 1) * kk] = b_ids[sel]
-                    out_cos[r * kk : (r + 1) * kk] = cos[r, sel]
-                    out_key[r * kk : (r + 1) * kk] = r6[r, sel]
-                keep = np.isfinite(out_key)
-                yield pd.DataFrame(
-                    {
-                        "src": out_src[keep],
-                        "dst": out_dst[keep],
-                        "cos_sim": out_cos[keep],
-                        "rank": out_rank[keep],
-                    }
-                )
-
-    nparts = sess.sparkContext.defaultParallelism
-    return queries.select("vec_id", "embedding").repartition(nparts).mapInPandas(
-        topk, schema="src long, dst long, cos_sim double, rank int"
+def _cosine_chunk(q_ids, Q, b_ids, b_X, kk: int, exclude_self: bool):
+    """Exact cosine top-kk of a query chunk against the id-sorted base:
+    flat ``(src, dst, cos_sim, rank)`` arrays ranked by descending
+    ``round(cos, 6)``, ties by dst. Dot products and norms accumulate
+    dimension by dimension, left to right — the SQL fold's order, so
+    values match the DuckDB oracle bit for bit. Self-hits and NaN keys
+    sort last and are dropped, so ranks stay contiguous. Because
+    ``b_ids`` ascends, a stable argsort of the negated key is the
+    ``(key, dst)`` lexsort, for every row at once."""
+    m, d = Q.shape
+    dot = np.zeros((m, len(b_ids)))
+    qn = np.zeros((m, 1))
+    bn = np.zeros((1, len(b_ids)))
+    for i in range(d):  # sequential fold parity with SQL
+        dot += Q[:, i : i + 1] * b_X[:, i][None, :]
+        qn[:, 0] += Q[:, i] * Q[:, i]
+        bn[0, :] += b_X[:, i] * b_X[:, i]
+    dot /= np.sqrt(qn) * np.sqrt(bn)  # now the cosine
+    key = np.round(dot, _RANK_DECIMALS)
+    np.negative(key, out=key)
+    if exclude_self:
+        key[q_ids[:, None] == b_ids[None, :]] = np.inf
+    sel = np.argsort(key, axis=1, kind="stable")[:, :kk]
+    ok = np.isfinite(np.take_along_axis(key, sel, axis=1).ravel())
+    return (
+        np.repeat(q_ids, kk)[ok],
+        b_ids[sel].ravel()[ok],
+        np.take_along_axis(dot, sel, axis=1).ravel()[ok],
+        np.tile(np.arange(1, kk + 1, dtype=np.int32), m)[ok],
     )
 
 
@@ -330,7 +281,7 @@ def emb_near_dups_lsh(
     exact cosine, via a broadcast embedding matrix while the base fits
     (``knn.MAX_BROADCAST_ROWS``) or an embeddings re-join at scale.
     """
-    from .knn import MAX_BROADCAST_ROWS, probe_collect
+    from .knn import MAX_BROADCAST_ROWS, probe_collect, sorted_base
 
     caller_n = n_base  # an explicit n_base is authoritative for the knob
     rows = None
@@ -381,12 +332,7 @@ def emb_near_dups_lsh(
         # driver-side with the exact fold ``rp_signature`` uses
         # (sequential across dims), so the two tiers stay bit-identical.
         sess = emb.sparkSession
-        if rows is None:
-            rows = emb.select("vec_id", "embedding").collect()
-        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-        X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        order = np.argsort(ids)
-        ids, X = ids[order], X[order]
+        ids, X = sorted_base(emb, rows=rows)
         W = np.array(_rp_weights(bits, d), dtype=np.float64)
         powers = 2 ** np.arange(bits, dtype=np.int64)
         dots = np.zeros((len(ids), bits))
@@ -797,9 +743,9 @@ def sq_bounds(
     if with_count:
         aggs.append(F.count(F.lit(1)).alias("n"))
     row = emb.agg(*aggs).head()
-    if with_count:
-        return float(row["lo"]), float(row["hi"]), int(row["n"])
-    return float(row["lo"]), float(row["hi"])
+    # an empty relation has no values: the degenerate bounds (0, 0)
+    lo, hi = (float(row[c]) if row[c] is not None else 0.0 for c in ("lo", "hi"))
+    return (lo, hi, int(row["n"])) if with_count else (lo, hi)
 
 
 def sq_codes(
@@ -851,34 +797,37 @@ def sq_topk(
     broadcasts at the SAME row threshold as the exact tier (review
     round 12 corrected an earlier 4x cap: the broadcast must carry the
     float64 vectors for the exact rerank alongside the uint8 codes, so
-    its bytes-per-row are ~1.1x the exact tier's, not a quarter); past
-    that, hash-split blocks each contribute their integer
-    top-``refine`` and a per-query window merges them — block-count
-    invariant, never a whole-base collect. Both stages are
-    deterministic pure arithmetic, so the DuckDB oracle replays the
-    whole path bit-for-bit.
+    its bytes-per-row are ~1.1x the exact tier's, not a quarter):
+    tiers come from the ``knn.blocked_topk`` driver, sized by the
+    bounds job's count, and every block — the whole base when it
+    fits — contributes its integer top-``refine`` to the
+    :func:`_rerank` merge — block-count invariant, never a whole-base
+    collect. Both stages are deterministic pure arithmetic, so the
+    DuckDB oracle replays the whole path bit-for-bit.
     """
-    from .knn import MAX_BROADCAST_ROWS, split_blocks
+    from .knn import blocked_topk
 
     # bounds + count in ONE aggregation job — the hot path scans the
     # base once here and once in the candidate stage, not three times
     lo, hi, cnt = sq_bounds(base, with_count=True)
-    if n_base is None:
-        n_base = cnt
-    cap = MAX_BROADCAST_ROWS
-    if n_base <= cap:
-        cands = _sq_candidates_broadcast(queries, base, lo, hi, refine, exclude_self)
-    else:
-        n_blocks = -(-n_base // cap)
-        parts = [
-            _sq_candidates_broadcast(queries, blk, lo, hi, refine, exclude_self)
-            for blk in split_blocks(base, n_blocks)
-        ]
-        cands = parts[0]
-        for df in parts[1:]:
-            cands = cands.unionByName(df)
-    # global top-`refine` by the integer candidate metric, then rank
-    # the survivors by exact distance — both windows deterministic
+
+    def block(blk, _rows, _n_blocks):
+        return _sq_candidates_broadcast(queries, blk, lo, hi, refine, exclude_self)
+
+    cands, _ = blocked_topk(
+        base, block, _CANDIDATE_SCHEMA, cnt if n_base is None else n_base
+    )
+    return _rerank(cands, refine, k)
+
+
+#: the block output of the SQ and PQ candidate scans
+_CANDIDATE_SCHEMA = "src long, dst long, dq long, dist double"
+
+
+def _rerank(cands: DataFrame, refine: int, k: int) -> DataFrame:
+    """The SQ/PQ merge, applied at every block count: global
+    top-``refine`` by the integer candidate metric, then rank the
+    survivors by exact distance — both windows deterministic."""
     w_dq = Window.partitionBy("src").orderBy("dq", "dst")
     w_ex = Window.partitionBy("src").orderBy(
         F.round(F.col("dist"), _RANK_DECIMALS), F.col("dst")
@@ -904,18 +853,15 @@ def _sq_candidates_broadcast(
     each query's integer top-``refine`` with both the candidate metric
     ``dq`` and the exact float64 distance (sequential per-dim fold —
     ulp parity with the SQL replay)."""
+    from .knn import sorted_base
+
     sess = base.sparkSession
     b = base.select("vec_id", sq_codes("embedding", lo, hi).alias("codes"), "embedding")
-    rows = b.collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    ids, C, X = sorted_base(b, "codes", "embedding")
     # uint8, not int64 (review round 12): codes are 0..255 by
     # construction, and the broadcast is the tier's memory budget —
     # the int64 diff buffers below upcast per chunk, never the payload
-    C = np.array([r["codes"] for r in rows], dtype=np.uint8)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, C, X = ids[order], C[order], X[order]
-    bc = sess.sparkContext.broadcast((ids, C, X))
+    bc = sess.sparkContext.broadcast((ids, C.astype(np.uint8), X))
 
     q = queries.select(
         F.col("vec_id").alias("src"),
@@ -924,7 +870,7 @@ def _sq_candidates_broadcast(
     )
 
     def search(batches):
-        # chunked batch-matrix form (same shape as _exact_knn_broadcast):
+        # chunked batch-matrix form (same shape as knn.broadcast_topk):
         # the integer candidate metric is accumulated dim-by-dim over a
         # (chunk, n) buffer for a whole chunk of queries at once, and
         # the exact rerank distances for all selected candidates of the
@@ -1098,11 +1044,13 @@ def pq_topk(
     oracle. Broadcast of (ids, codes, floats) while the base fits —
     the SAME row threshold as the exact tier (review round 12: the
     rerank floats dominate the payload, so the old 4x cap overstated
-    the compression's broadcast headroom); hash-split blocks with a
-    global (dq, dst) merge past it — block-count invariant, never a
-    whole-base collect.
+    the compression's broadcast headroom). Tiers come from the
+    ``knn.blocked_topk`` driver, and every block feeds the global
+    :func:`_rerank` merge — block-count invariant, never a whole-base
+    collect. The probed rows of a one-block base give the codebook
+    directly; otherwise one TakeOrdered builds it once per call.
     """
-    from .knn import MAX_BROADCAST_ROWS, probe_collect, split_blocks
+    from .knn import blocked_topk
 
     ksub = 2**nbits
     if ksub > 256:
@@ -1114,18 +1062,11 @@ def pq_topk(
             f"nbits={nbits} gives {ksub} sub-centroids, past the uint8 "
             "code range (max nbits=8)"
         )
-    cap = MAX_BROADCAST_ROWS
-    pre = None
-    if n_base is None:
-        pre = probe_collect(base.select("vec_id", "embedding"))
-        n_base = len(pre) if pre is not None else cap + 1
-    if n_base <= MAX_BROADCAST_ROWS and pre is not None:
-        cands = _pq_candidates_broadcast(
-            queries, base, None, m, ksub, refine, exclude_self, pre_rows=pre
-        )
-    else:
-        # global codebook first (ksub rows via a TakeOrdered — tiny),
-        # then per-block candidate scans that share it
+
+    @cache
+    def global_codebook():
+        # ksub rows via one TakeOrdered — tiny, and built once per
+        # call however many blocks share it
         from ..functions.hashing import hash60
 
         key = hash60(F.concat(F.lit("pq_"), F.col("vec_id").cast("string")))
@@ -1136,60 +1077,33 @@ def pq_topk(
             .limit(ksub)
             .collect()
         )
-        cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-        if n_base <= cap:
-            cands = _pq_candidates_broadcast(
-                queries, base, cents, m, ksub, refine, exclude_self
-            )
-        else:
-            n_blocks = -(-n_base // cap)
-            parts = [
-                _pq_candidates_broadcast(
-                    queries, blk, cents, m, ksub, refine, exclude_self
-                )
-                for blk in split_blocks(base, n_blocks)
-            ]
-            cands = parts[0]
-            for df in parts[1:]:
-                cands = cands.unionByName(df)
-    w_dq = Window.partitionBy("src").orderBy("dq", "dst")
-    w_ex = Window.partitionBy("src").orderBy(
-        F.round(F.col("dist"), _RANK_DECIMALS), F.col("dst")
-    )
-    return (
-        cands.withColumn("crank", F.row_number().over(w_dq))
-        .filter(F.col("crank") <= refine)
-        .withColumn("rank", F.row_number().over(w_ex))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", "dist", F.col("rank").cast("int").alias("rank"))
-    )
+        return np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
+
+    def block(blk, rows, _n_blocks):
+        # probed rows are the whole base: the codebook comes from them
+        cents = global_codebook() if rows is None else pq_codebook(rows, m, ksub)
+        return _pq_candidates_broadcast(queries, blk, rows, cents, m, refine, exclude_self)
+
+    cands, _ = blocked_topk(base, block, _CANDIDATE_SCHEMA, n_base)
+    return _rerank(cands, refine, k)
 
 
 def _pq_candidates_broadcast(
     queries: DataFrame,
     base: DataFrame,
-    cents: "np.ndarray | None",
+    rows: list | None,
+    cents: "np.ndarray",
     m: int,
-    ksub: int,
     refine: int,
     exclude_self: bool,
-    pre_rows: list | None = None,
 ) -> DataFrame:
     """One PQ block: encode the (broadcast) base against the codebook,
     then each query batch builds its ADC table and emits its integer
     top-``refine`` with the exact float64 distance alongside."""
+    from .knn import sorted_base
+
     sess = base.sparkSession
-    rows = (
-        pre_rows
-        if pre_rows is not None
-        else base.select("vec_id", "embedding").collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, X = ids[order], X[order]
-    if cents is None:
-        cents = pq_codebook(rows, m, ksub)
+    ids, X = sorted_base(base, rows=rows)
     codes = _pq_encode(X, cents, m)
     bc = sess.sparkContext.broadcast((ids, X, codes, cents))
 
